@@ -17,7 +17,13 @@ Execution is ONE Spark job regardless of bin count:
 
     read(binned files) ──broadcast-join── file→bin map (metadata-sized)
       └─ repartition(n_bins, "_bin")          # each bin lands in one task
-           └─ write.partitionBy(parts + "_bin")  # exactly one file per bin
+           └─ write_staged(bin_col="_bin")     # exactly one file per bin
+
+The write is table/writer.py ``write_staged``, the staging path every data
+write shares (schema cast, hidden-partition values, physical column names,
+``write.parquet.*`` options, ``partitionBy(parts + "_bin")``). As a
+pre-binned, content-preserving rewrite it skips CHECK constraints and
+``write.sort.order``, which apply to new rows only.
 
 Hash-partitioning on ``_bin`` with n_bins partitions may co-locate two bins
 in one task, but ``partitionBy`` still splits them into separate files per
@@ -44,6 +50,7 @@ from kafka_delta_ingest_spark.plans.bin_packing import (
 )
 from kafka_delta_ingest_spark.table.format import Snapshot, Table, Transaction
 from kafka_delta_ingest_spark.table.stats import compute_add_entries
+from kafka_delta_ingest_spark.table.writer import write_staged
 
 
 def _rewrite_bins(
@@ -51,7 +58,6 @@ def _rewrite_bins(
 ) -> tuple[str, dict[int, list]]:
     """One Spark job: rewrite every bin into exactly one output file.
     Returns (staging_dir, {bin_id: [FileEntry, ...]})."""
-    absd, _ = table.new_data_dir()
     file_to_bin = [
         (os.path.join(table.root, f.path), b.bin_id) for b in bins for f in b.files
     ]
@@ -66,39 +72,17 @@ def _rewrite_bins(
         .join(F.broadcast(bins_map), "_path")
         .drop("_path")
     )
-    # hidden partitioning: recompute transform values (path-only columns)
-    # before the partitioned write — the scan returns source columns only
-    from kafka_delta_ingest_spark.table import transforms
-
-    pkeys = transforms.keys(snap.partition_cols)
-    for k, expr in transforms.derived_exprs(
-        snap.partition_cols, snap.schema
-    ).items():
-        df = df.withColumn(k, expr)
     # 2× partitions over bins: hash collisions would otherwise give some
     # tasks two bins (stragglers); partitionBy still emits exactly one file
     # per bin because a bin's rows never split across tasks
     n_part = max(2 * len(bins), spark.sparkContext.defaultParallelism, 1)
-    from kafka_delta_ingest_spark.table.writer import (
-        apply_write_options,
-        to_physical,
-    )
-
-    (
-        apply_write_options(
-            to_physical(df, snap.column_mapping)
-            .repartition(n_part, "_bin")
-            .write.mode("overwrite"),
-            snap.properties,
-        )
-        .partitionBy(*(pkeys + ["_bin"]))
-        .parquet(absd)
+    absd, keys = write_staged(
+        table, df.repartition(n_part, "_bin"), snap.partition_cols,
+        snap.schema, snap.properties, snap.column_mapping, bin_col="_bin",
     )
     # stats over staged output; _bin is a synthetic partition col we strip
-    adds = compute_add_entries(
-        spark, table.root, absd, snap.schema, pkeys + ["_bin"],
-        column_mapping=snap.column_mapping,
-    )
+    adds = compute_add_entries(spark, table.root, absd, snap.schema, keys,
+                               column_mapping=snap.column_mapping)
     by_bin: dict[int, list] = {}
     for fe in adds:
         bid = int(fe.partition_values.pop("_bin"))

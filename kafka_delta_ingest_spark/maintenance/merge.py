@@ -37,7 +37,9 @@ from pyspark.sql import types as T
 from kafka_delta_ingest_spark.plans.pruning import prune_files
 from kafka_delta_ingest_spark.plans.salting import salted_join
 from kafka_delta_ingest_spark.table.format import Table, Transaction
-from kafka_delta_ingest_spark.table.stats import compute_add_entries
+# not called here: perfbench/layers.py wraps it by name in this module
+from kafka_delta_ingest_spark.table.stats import compute_add_entries  # noqa: F401
+from kafka_delta_ingest_spark.table.writer import stage_dataframe
 
 
 @dataclass
@@ -282,38 +284,15 @@ def merge_into(
         hot_keys=hot_keys,
         auto_detect=auto_detect_skew and hot_keys is None,
     )
-    if when_matched == "delete":
-        survivors = joined.where(F.col("__is_src").isNull()).drop("__is_src")
-        out = survivors
-        inserts = spark.createDataFrame([], snap.schema)
-    else:
-        # matched target rows are dropped; their replacement comes from source
-        survivors = joined.where(F.col("__is_src").isNull()).drop("__is_src")
-        inserts = source  # both updates and brand-new keys
-        out = survivors.unionByName(inserts)
-
-    absd, _ = table.new_data_dir()
-    from kafka_delta_ingest_spark.table import transforms
-
-    pkeys = transforms.keys(snap.partition_cols)
-    for k, e in transforms.derived_exprs(snap.partition_cols, snap.schema).items():
-        out = out.withColumn(k, e)
-    from kafka_delta_ingest_spark.table.writer import (
-        apply_constraints,
-        apply_sort_order,
-        apply_write_options,
-        to_physical,
+    # matched target rows are dropped; on update their replacement comes
+    # from source (both updates and brand-new keys)
+    out = joined.where(F.col("__is_src").isNull()).drop("__is_src")
+    if when_matched != "delete":
+        out = out.unionByName(source)
+    _, adds = stage_dataframe(
+        spark, table, out, snap.partition_cols, snap.schema,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
-
-    out = apply_sort_order(apply_constraints(out, snap.properties),
-                           snap.properties, pkeys)
-    out = to_physical(out, snap.column_mapping)
-    w = apply_write_options(out.write.mode("overwrite"), snap.properties)
-    if pkeys:
-        w = w.partitionBy(*pkeys)
-    w.parquet(absd)
-    adds = compute_add_entries(spark, table.root, absd, snap.schema, pkeys,
-                               column_mapping=snap.column_mapping)
 
     v = table.commit(
         Transaction(
@@ -496,31 +475,12 @@ def _merge_clauses(
                 else v.when(F.col("__action") == "i", val)
             )
         expr = v.otherwise(F.col(c)) if v is not None else F.col(c)
-        out_cols.append(expr.cast(snap.schema[c].dataType).alias(c))
+        out_cols.append(expr.alias(c))  # staging casts to the table schema
     out = kept.select(*out_cols)
-
-    absd, _ = table.new_data_dir()
-    from kafka_delta_ingest_spark.table import transforms
-
-    pkeys = transforms.keys(snap.partition_cols)
-    for c, e in transforms.derived_exprs(snap.partition_cols, snap.schema).items():
-        out = out.withColumn(c, e)
-    from kafka_delta_ingest_spark.table.writer import (
-        apply_constraints,
-        apply_sort_order,
-        apply_write_options,
-        to_physical,
+    _, adds = stage_dataframe(
+        spark, table, out, snap.partition_cols, snap.schema,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
-
-    out = apply_sort_order(apply_constraints(out, snap.properties),
-                           snap.properties, pkeys)
-    out = to_physical(out, snap.column_mapping)
-    wtr = apply_write_options(out.write.mode("overwrite"), snap.properties)
-    if pkeys:
-        wtr = wtr.partitionBy(*pkeys)
-    wtr.parquet(absd)
-    adds = compute_add_entries(spark, table.root, absd, snap.schema, pkeys,
-                               column_mapping=snap.column_mapping)
 
     v = table.commit(
         Transaction(

@@ -16,7 +16,7 @@ Plan shape (scale-first):
   manifest-byte-weighted quantile bounds over a dims-only projection
   (one pruned agg job; tokens never decoded) → codegen'd binary-search
   bucket id → ONE hash shuffle on a table-wide dense bin id → write
-  (one file per bin) → atomic replace commit
+  (table/writer.py write_staged, one file per bin) → atomic replace commit
   (data_change=False; scan must be token-array identical).
 
 Range placement is explicit rather than ``repartitionByRange``: Spark's
@@ -51,6 +51,7 @@ from kafka_delta_ingest_spark.table.format import (
     Transaction,
 )
 from kafka_delta_ingest_spark.table.stats import compute_add_entries
+from kafka_delta_ingest_spark.table.writer import write_staged
 
 # 63 bits of key: bits-per-dim by dimensionality
 _BITS_FOR_DIMS = {1: 62, 2: 31, 3: 21, 4: 15}  # 1-dim capped so 1<<bits fits a long
@@ -450,7 +451,6 @@ def cluster(
         stat_ranges = _manifest_ranges(scoped, dims)
         keyed = cluster_keyed_df(df, dims, curve, stat_ranges, key_impl)
 
-        absd, _ = table.new_data_dir()
         # Range placement WITHOUT repartitionByRange: Spark's
         # RangePartitioner samples by re-executing the child plan over
         # FULL rows — a second read+decode of the token arrays per
@@ -561,17 +561,11 @@ def cluster(
         out = bucketed.repartition(n_part, "_gbin")
         if sort_rows:
             out = out.sortWithinPartitions("_gbin", "_ckey")
-        out = out.drop("_ckey")
-        from kafka_delta_ingest_spark.table.writer import (
-            apply_write_options,
-            to_physical,
-        )
-
-        out = to_physical(out, snap.column_mapping)
-        (
-            apply_write_options(out.write.mode("overwrite"), snap.properties)
-            .partitionBy(*(pkeys + ["_gbin"]))
-            .parquet(absd)
+        # the shared write drops _ckey (not a table column) and recomputes
+        # the hidden-partition values after the shuffle
+        absd, keys = write_staged(
+            table, out, snap.partition_cols, snap.schema, snap.properties,
+            snap.column_mapping, bin_col="_gbin",
         )
     finally:
         if prev_split is not None:
@@ -581,10 +575,8 @@ def cluster(
     t_write = time.time() - t_write0
 
     t_stats0 = time.time()
-    adds = compute_add_entries(
-        spark, table.root, absd, snap.schema, pkeys + ["_gbin"],
-        column_mapping=snap.column_mapping,
-    )
+    adds = compute_add_entries(spark, table.root, absd, snap.schema, keys,
+                               column_mapping=snap.column_mapping)
     for fe in adds:
         fe.partition_values.pop("_gbin", None)
     t_stats = time.time() - t_stats0

@@ -144,7 +144,8 @@ class IngestPipeline:
                 # measured 960 ~3 KB files for one sf0.1 batch, 30 after)
                 _, adds = stage_dataframe(
                     spark, self.table, good, snap.partition_cols, snap.schema,
-                    layout="rebalance",
+                    properties=snap.properties,
+                    column_mapping=snap.column_mapping, layout="rebalance",
                 )
                 v = self.table.commit(
                     Transaction(operation="ingest", adds=adds, app_txns=app_txns),
@@ -174,7 +175,9 @@ class IngestPipeline:
             if dead_rows:
                 dsnap = self.dlq_table.snapshot()
                 _, dadds = stage_dataframe(
-                    spark, self.dlq_table, dead, dsnap.partition_cols, dsnap.schema
+                    spark, self.dlq_table, dead, dsnap.partition_cols,
+                    dsnap.schema, properties=dsnap.properties,
+                    column_mapping=dsnap.column_mapping,
                 )
                 self.dlq_table.commit(
                     Transaction(operation="dead-letters", adds=dadds)

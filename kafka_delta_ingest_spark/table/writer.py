@@ -16,7 +16,7 @@ from kafka_delta_ingest_spark.table.stats import compute_add_entries
 def parquet_write_options(properties: dict | None) -> dict[str, str]:
     """Map ``write.parquet.*`` table properties to Spark parquet writer
     options — honored by EVERY data write path (ingest append, compaction,
-    clustering, MERGE, CoW DML all stage through a DataFrameWriter):
+    clustering, MERGE, CoW DML all stage through ``write_staged``):
 
     - ``write.parquet.compression`` → ``compression`` (zstd/snappy/...);
       at 10^12 tokens the codec choice is a 2-3× disk/network multiplier.
@@ -58,11 +58,11 @@ def apply_write_options(writer, properties: dict | None):
 def sort_order(properties: dict | None) -> list[tuple[str, bool]]:
     """Parse the ``write.sort.order`` table property — Iceberg-style
     write-time sort order: ``"col [ASC|DESC], col2 [ASC|DESC], ..."`` →
-    ``[(column, ascending)]``. Applies to every NEW-row write path
-    (append/ingest/MERGE/CoW DML, all of which stage through
-    ``stage_dataframe``); table-maintenance rewrites (compaction /
-    Z-order / OPTIMIZE) impose their own clustering order instead,
-    exactly as Iceberg's rewrite strategies supersede the write order."""
+    ``[(column, ascending)]``. Applies to every new-row write
+    (``write_staged`` without ``bin_col``: append, ingest, MERGE, CoW
+    DML); pre-binned rewrites (compaction, Z-order / Hilbert OPTIMIZE)
+    impose their own clustering order instead, exactly as Iceberg's
+    rewrite strategies supersede the write order."""
     raw = str((properties or {}).get("write.sort.order", "") or "")
     out: list[tuple[str, bool]] = []
     for part in raw.split(","):
@@ -129,17 +129,18 @@ def apply_constraints(df: DataFrame, properties: dict | None) -> DataFrame:
     return df
 
 
-def _enforce_schema(df: DataFrame, schema) -> DataFrame:
-    """Schema-on-write enforcement: project + cast to the table schema,
-    failing fast on missing columns (ref record_batch_from_json schema
-    mismatch error, src/writer.rs:203-208)."""
+def _enforce_schema(df: DataFrame, schema, extra: list[str]) -> DataFrame:
+    """Schema-on-write enforcement: project + cast to the table schema
+    (plus the ``extra`` columns, uncast), failing fast on missing columns
+    (ref record_batch_from_json schema mismatch error,
+    src/writer.rs:203-208)."""
     cols = []
     have = dict((f.name, f) for f in df.schema.fields)
     for f in schema.fields:
         if f.name not in have:
             raise ValueError(f"missing column for table schema: {f.name}")
         cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    return df.select(*cols, *extra)
 
 
 def to_physical(df: DataFrame, column_mapping: "dict[str, str] | None") -> DataFrame:
@@ -152,6 +153,69 @@ def to_physical(df: DataFrame, column_mapping: "dict[str, str] | None") -> DataF
     return df
 
 
+def write_staged(
+    table: Table,
+    df: DataFrame,
+    partition_cols: list[str],
+    schema,
+    properties: dict | None,
+    column_mapping: "dict[str, str] | None",
+    layout: str | None = None,
+    bin_col: str | None = None,
+) -> tuple[str, list[str]]:
+    """Write ``df`` to a fresh per-commit data dir; return (dir, the
+    partition keys written). The one data-write sequence of the engine:
+    schema cast, derived partition columns, CHECK constraints,
+    ``write.sort.order``, optional rebalance, physical column names,
+    ``write.parquet.*`` options, ``partitionBy``.
+
+    ``partition_cols`` is the partition SPEC: identity column names
+    and/or transforms (``bucket(16,doc_id)`` — table/transforms.py).
+    Transform values are computed here (pure Catalyst exprs) and become
+    path-only columns via partitionBy.
+
+    ``bin_col``: a synthetic bin column the caller has already shuffled
+    on (compaction's ``_bin``, clustering's ``_gbin``: one output file
+    per bin); it is appended to ``partitionBy`` and the caller pops it
+    from the Add entries. Such a pre-binned write is a content-preserving
+    rewrite of rows already checked on their way in, so CHECK constraints
+    and the write sort order apply only to new-row writes
+    (``bin_col=None``).
+
+    ``layout="rebalance"`` inserts an AQE REBALANCE-by-partition-keys
+    shuffle before the write (guide §6: coalesce on write): without it a
+    partitioned append fans out to tasks × partition-values files — the
+    sf0.1 ingest batch (100k rows, 32 tasks, 30 dates) wrote 960 ~3 KB
+    files, and every downstream manifest/stats/scan pays O(files).
+    Rebalance hash-clusters rows by partition value and lets AQE both
+    merge small values into one task and split a hot value by advisory
+    size, so it stays skew-safe at scale. Opt-in because the input's own
+    task layout is sometimes the point (fragmented-table fixtures), and a
+    pre-binned rewrite already shuffled on its bin."""
+    from kafka_delta_ingest_spark.table import transforms
+
+    absd, _rel = table.new_data_dir()
+    extra = [bin_col] if bin_col else []
+    out = _enforce_schema(df, schema, extra)
+    if not bin_col:  # new rows only, see above
+        out = apply_constraints(out, properties)
+    pkeys = transforms.keys(partition_cols)
+    for k, expr in transforms.derived_exprs(partition_cols, schema).items():
+        out = out.withColumn(k, expr)
+    if layout == "rebalance" and pkeys:
+        out = out.hint("rebalance", *pkeys)
+    if not bin_col:
+        out = apply_sort_order(out, properties, pkeys)
+    keys = pkeys + extra
+    w = apply_write_options(
+        to_physical(out, column_mapping).write.mode("overwrite"), properties
+    )
+    if keys:
+        w = w.partitionBy(*keys)
+    w.parquet(absd)
+    return absd, keys
+
+
 def stage_dataframe(
     spark: SparkSession,
     table: Table,
@@ -162,47 +226,19 @@ def stage_dataframe(
     column_mapping: "dict[str, str] | None" = None,
     layout: str | None = None,
 ) -> tuple[str, list[FileEntry]]:
-    """Write ``df`` to a fresh per-commit data dir; return (dir, adds).
-
-    ``partition_cols`` is the partition SPEC: identity column names
-    and/or transforms (``bucket(16,doc_id)`` — table/transforms.py).
-    Transform values are computed here (pure Catalyst exprs) and become
-    path-only columns via partitionBy; identity columns behave as
-    before. ``properties``: the table properties (write.parquet.* become
-    writer options); None loads them from the current snapshot.
-
-    ``layout="rebalance"`` inserts an AQE REBALANCE-by-partition-keys
-    shuffle before the write (guide §6: coalesce on write): without it a
-    partitioned append fans out to tasks × partition-values files — the
-    sf0.1 ingest batch (100k rows, 32 tasks, 30 dates) wrote 960 ~3 KB
-    files, and every downstream manifest/stats/scan pays O(files).
-    Rebalance hash-clusters rows by partition value and lets AQE both
-    merge small values into one task and split a hot value by advisory
-    size, so it stays skew-safe at scale. Opt-in because several callers
-    NEED fan-out layouts (fragmented-table fixtures, pre-binned
-    maintenance rewrites)."""
-    from kafka_delta_ingest_spark.table import transforms
-
+    """Write new rows with ``write_staged`` and build their Add entries
+    from the footers; return (dir, adds). ``properties`` /
+    ``column_mapping``: pass both from the snapshot the caller holds —
+    either one None costs a log replay to load them."""
     if properties is None or column_mapping is None:
         snap = table.snapshot()
         if properties is None:
             properties = snap.properties
         if column_mapping is None:
             column_mapping = snap.column_mapping
-    absd, _rel = table.new_data_dir()
-    out = apply_constraints(_enforce_schema(df, schema), properties)
-    pkeys = transforms.keys(partition_cols)
-    for k, expr in transforms.derived_exprs(partition_cols, schema).items():
-        out = out.withColumn(k, expr)
-    if layout == "rebalance" and pkeys:
-        out = out.hint("rebalance", *pkeys)
-    out = apply_sort_order(out, properties, pkeys)
-    out = to_physical(out, column_mapping)
-    w = apply_write_options(out.write.mode("overwrite"), properties)
-    if pkeys:
-        w = w.partitionBy(*pkeys)
-    w.parquet(absd)
-    adds = compute_add_entries(spark, table.root, absd, schema, pkeys,
+    absd, keys = write_staged(table, df, partition_cols, schema, properties,
+                              column_mapping, layout=layout)
+    adds = compute_add_entries(spark, table.root, absd, schema, keys,
                                column_mapping=column_mapping)
     return absd, adds
 
@@ -221,7 +257,7 @@ def write_dataframe(
     snap = table.snapshot()
     _, adds = stage_dataframe(
         spark, table, df, snap.partition_cols, snap.schema,
-        properties=snap.properties,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
     txn = Transaction(
         operation=operation,

@@ -66,12 +66,21 @@ def test_writes_after_rename_use_physical_names(spark, tmp_table_root):
 
 
 def test_maintenance_rewrites_under_mapping(spark, tmp_table_root):
+    from kafka_delta_ingest_spark.maintenance.compact import compact
     from kafka_delta_ingest_spark.maintenance.merge import merge_into
     from kafka_delta_ingest_spark.maintenance.optimize import optimize
 
     t = _mk(spark, tmp_table_root)
     t.rename_column("n_tok", "tok_len")
     fp = content_fingerprint(t.snapshot().scan(spark))
+    pre_files = {f.path for f in t.snapshot().files}
+    assert compact(spark, t, job_id="cm-compact")["files_written"] > 0
+    snap = t.snapshot()
+    assert content_fingerprint(snap.scan(spark)) == fp
+    for f in snap.files:  # rewritten: physical pages, logical stats keys
+        if f.path not in pre_files:
+            assert "n_tok" in pq.read_schema(os.path.join(t.root, f.path)).names
+            assert "tok_len" in f.stats["min"]
     optimize(spark, t, dims=["source", "tok_len", "doc_id"], curve="zorder",
              target_file_bytes=64 * 1024 * 1024)
     assert content_fingerprint(t.snapshot().scan(spark)) == fp

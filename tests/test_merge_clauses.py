@@ -197,6 +197,25 @@ def test_salted_full_outer_equivalence(spark, tmp_path):
     assert results[0] == results[1]
 
 
+@pytest.mark.parametrize("when_matched", ["update", [MergeClause("update")]],
+                         ids=["legacy", "clauses"])
+def test_merge_casts_wider_source_types(spark, tmp_path, when_matched):
+    """A source whose types are wider than the table's (what
+    createDataFrame gives for Python ints) is cast to the table schema on
+    write: the committed files keep the table's parquet types, so later
+    scans read them."""
+    t, _ = _mk(spark, tmp_path, n_docs=40, n_files=2)
+    src = spark.createDataFrame(
+        [(f"doc-{3:012d}", [7, 8, 9], 3, "web"), ("brand-new", [1], 1, "books")],
+        "doc_id string, tokens array<bigint>, n_tok bigint, source string",
+    )
+    merge_into(spark, t, src, key="doc_id", when_matched=when_matched)
+    got = _rows(t.snapshot().scan(spark))
+    assert len(got) == 41
+    assert got[f"doc-{3:012d}"] == ([7, 8, 9], 3, "web")
+    assert got["brand-new"] == ([1], 1, "books")
+
+
 def test_clause_validation(spark, tmp_path):
     t, _ = _mk(spark, tmp_path, n_docs=30, n_files=2)
     src = tokens_df(spark, 30, max_tok=8)

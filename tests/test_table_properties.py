@@ -1,7 +1,7 @@
 """Table properties (table/format.py + table/writer.py): versioned
 key-value metadata; write.parquet.* properties become parquet writer
 options on every data write path (append, compaction, clustering,
-MERGE, CoW DML all stage through a DataFrameWriter)."""
+MERGE, CoW DML all stage through table/writer.py write_staged)."""
 
 import os
 
@@ -68,6 +68,8 @@ def test_properties_survive_checkpoint(spark, tmp_path):
 
 
 def test_compression_property_honored_by_all_write_paths(spark, tmp_path):
+    from kafka_delta_ingest_spark.maintenance.compact import compact
+    from kafka_delta_ingest_spark.maintenance.merge import MergeClause, merge_into
     from kafka_delta_ingest_spark.maintenance.optimize import optimize
 
     t = Table.create(
@@ -76,6 +78,14 @@ def test_compression_property_honored_by_all_write_paths(spark, tmp_path):
     )
     write_dataframe(spark, t, tokens_df(spark, 200, max_tok=8).repartition(4))
     assert _codecs(t) == {"ZSTD"}
+    assert compact(spark, t, job_id="codec")["files_written"] > 0
+    assert _codecs(t) == {"ZSTD"}
+    # both MERGE paths: updates of existing docs rewrite the touched files
+    src = tokens_df(spark, 20, seed=3, max_tok=8)
+    for when_matched in ("update", [MergeClause("update")]):
+        m = merge_into(spark, t, src, key="doc_id", when_matched=when_matched)
+        assert m["files_written"] > 0
+        assert _codecs(t) == {"ZSTD"}
     optimize(spark, t, dims=["n_tok", "doc_id"], curve="zorder",
              target_file_bytes=4 * 1024 * 1024)
     assert _codecs(t) == {"ZSTD"}  # rewrites inherit the codec

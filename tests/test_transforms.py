@@ -158,6 +158,8 @@ def test_bucket_table_write_scan_prune(spark, tmp_path):
 
 
 def test_maintenance_preserves_hidden_layout(spark, tmp_path):
+    from kafka_delta_ingest_spark.maintenance.compact import compact
+    from kafka_delta_ingest_spark.maintenance.merge import merge_into
     from kafka_delta_ingest_spark.maintenance.optimize import optimize
 
     t = Table.create(
@@ -167,14 +169,37 @@ def test_maintenance_preserves_hidden_layout(spark, tmp_path):
     write_dataframe(spark, t, df)
     before = _rows(t.snapshot().scan(spark))
 
+    def check_layout(snap):
+        # rewritten files carry BOTH partition keys and correct bucket values
+        for f in snap.files:
+            assert set(f.partition_values) == {"source", "doc_id_bucket_4"}
+            assert "doc_id_bucket_4=" in f.path and "source=" in f.path
+            for bound in ("min", "max"):
+                assert f.partition_values["doc_id_bucket_4"] == str(
+                    transforms.py_value("bucket(4,doc_id)",
+                                        f.stats[bound]["doc_id"]))
+
+    assert compact(spark, t, job_id="hidden")["files_written"] > 0
+    assert _rows(t.snapshot().scan(spark)) == before  # token-array equality
+    check_layout(t.snapshot())
     optimize(spark, t, dims=["n_tok", "doc_id"], curve="zorder",
              target_file_bytes=4 * 1024 * 1024)
     snap = t.snapshot()
-    assert _rows(snap.scan(spark)) == before  # token-array equality
-    # rewritten files carry BOTH partition keys and correct bucket values
-    for f in snap.files:
-        assert set(f.partition_values) == {"source", "doc_id_bucket_4"}
-        assert "doc_id_bucket_4=" in f.path and "source=" in f.path
+    assert _rows(snap.scan(spark)) == before
+    check_layout(snap)
+
+    # MERGE: updated docs keep their bucket, a new doc lands in its own
+    keys = sorted(before)[:5]
+    upd = df.where(F.col("doc_id").isin(keys)).withColumn(
+        "tokens", F.transform("tokens", lambda x: x + F.lit(1)))
+    new = df.where(F.col("doc_id") == keys[0]).withColumn(
+        "doc_id", F.lit("brand-new-doc"))
+    merge_into(spark, t, upd.unionByName(new), key="doc_id", job_id="hidden-m")
+    snap = t.snapshot()
+    got = _rows(snap.scan(spark))
+    assert len(got) == len(before) + 1
+    assert got[keys[1]] == [x + 1 for x in before[keys[1]]]
+    check_layout(snap)
 
 
 def test_merge_prunes_by_bucket_membership(spark, tmp_path):
