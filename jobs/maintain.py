@@ -418,12 +418,10 @@ def main():
             spark, table, [c.strip() for c in args.columns.split(",")]
         )
     elif args.op == "ndv":
-        from kafka_delta_ingest_spark.maintenance.analyze import (
-            load_index,
-            ndv_estimates,
-        )
+        from kafka_delta_ingest_spark.maintenance.analyze import ndv_estimates
+        from kafka_delta_ingest_spark.maintenance.artifacts import load_index
 
-        idx = load_index(table)
+        idx = load_index(table, "ndv")
         out = {
             "analyzed_version": idx["analyzed_version"] if idx else None,
             "ndv": ndv_estimates(spark, table) if idx else {},

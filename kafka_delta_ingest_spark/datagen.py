@@ -91,9 +91,10 @@ def make_small_file_table(
     pcols = ["source"] if partition_by_source else []
     table = Table.create(root, TOKENS_SCHEMA, pcols, properties=properties)
     df = tokens_df(spark, n_docs, seed=seed, max_tok=max_tok).repartition(n_files)
+    snap = table.snapshot()
     _, adds = stage_dataframe(
         spark, table, df, pcols, TOKENS_SCHEMA,
-        properties=table.snapshot().properties,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
     table.commit(Transaction(operation="append", adds=adds))
     return table

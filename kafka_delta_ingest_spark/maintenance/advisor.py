@@ -61,10 +61,10 @@ def suggest_cluster_dims(
 
     Returns None when no NDV artifact covers any usable column (caller
     falls back to explicit dims)."""
-    from kafka_delta_ingest_spark.maintenance.analyze import load_index
+    from kafka_delta_ingest_spark.maintenance import artifacts
     from kafka_delta_ingest_spark.table import transforms
 
-    idx = load_index(table)
+    idx = artifacts.load_index(table, "ndv")
     if idx is None:
         return None
     snap = snap or table.snapshot()
@@ -97,14 +97,10 @@ def suggest_cluster_dims(
     # NDV per candidate from the artifact (no data read). ndv_estimates
     # needs a SparkSession to MAX-merge registers; rank driver-side from
     # the artifact parquet instead — tiny (files × columns × 256 rows)
-    import os
-
     import pyarrow.parquet as pq
 
-    from kafka_delta_ingest_spark.maintenance.analyze import _stats_dir
-
     tbl = pq.read_table(
-        os.path.join(_stats_dir(table), idx["artifact"]),
+        artifacts.artifact_path(table, "ndv", idx),
         columns=["column", "bucket", "rho"],
     )
     regs: dict[str, dict[int, int]] = {}
@@ -311,9 +307,9 @@ def advise(
     # and any CBO consumer read the ANALYZE artifact; once enough of the
     # live file set postdates it, multiplicity estimates drift. Pure
     # metadata: compare the artifact's recorded file list to the live one.
-    from kafka_delta_ingest_spark.maintenance.analyze import load_index
+    from kafka_delta_ingest_spark.maintenance import artifacts
 
-    idx = load_index(table)
+    idx = artifacts.load_index(table, "ndv")
     if idx is not None:
         live_paths = {f.path for f in snap.files}
         known = set(idx["file_paths"])
@@ -351,11 +347,7 @@ def advise(
     # file the prune can no longer skip, so effectiveness decays with
     # churn. Same metadata-only comparison as the NDV check; a lower
     # threshold because the cost of staleness is paid by every merge.
-    from kafka_delta_ingest_spark.maintenance.bloom import (
-        load_index as load_bloom_index,
-    )
-
-    bidx = load_bloom_index(table)
+    bidx = artifacts.load_index(table, "bloom")
     if bidx is not None:
         live_paths = {f.path for f in snap.files}
         unseen = len(live_paths - set(bidx["file_paths"]))

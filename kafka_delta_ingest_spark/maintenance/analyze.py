@@ -15,13 +15,11 @@ is that missing layer rebuilt Spark-first over this repo's HLL sketches:
 - **Per-FILE sketches, persisted as parquet**: data files are immutable,
   so their sketches are too — the artifact under ``<root>/_stats/ndv/``
   is itself a table Spark reads and writes (at 10^12 rows the stats for
-  millions of files do not fit in a driver JSON). A tiny atomically-
-  renamed ``INDEX.json`` pins the live artifact version.
-- **Incremental by construction**: re-ANALYZE after a commit reuses every
-  surviving file's rows from the previous artifact (anti-join of paths,
-  never a rescan), scans only files the artifact has not seen, and drops
-  rows of removed files. Cost is proportional to churn, not table size —
-  the same ledger discipline as every maintenance op here.
+  millions of files do not fit in a driver JSON). Its lifecycle — the
+  atomically published index, incremental reuse (only unseen files are
+  scanned, removed files' rows dropped, cost ∝ churn) and cleanup — is
+  the shared one in maintenance/artifacts.py; this module supplies the
+  register rows.
 - **Table-level NDV without touching data**: registers MAX-merge across
   files (the HLL property pytest-proven in tests/test_sketches.py), then
   one exact-integer estimate — ``ndv_df`` reads ONLY the artifact.
@@ -36,39 +34,17 @@ already in the manifest per file.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_delta_ingest_spark.maintenance import artifacts
 from kafka_delta_ingest_spark.operators.sketches import (
     hll_bucket_rho,
     hll_estimate,
 )
 from kafka_delta_ingest_spark.table.format import Table
-from kafka_delta_ingest_spark.table.scan import read_entries
 
-_STATS_SUBDIR = os.path.join("_stats", "ndv")
-
-
-def _stats_dir(table: Table) -> str:
-    return os.path.join(table.root, _STATS_SUBDIR)
-
-
-def _index_path(table: Table) -> str:
-    return os.path.join(_stats_dir(table), "INDEX.json")
-
-
-def load_index(table: Table) -> dict | None:
-    try:
-        with open(_index_path(table)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+_ROW_DDL = "path string, column string, bucket int, rho int"
 
 
 def _register_rows(
@@ -112,12 +88,10 @@ def analyze(
     p: int = 8,
     salt: str = "hll",
     family: str = "xxhash64",
-    cleanup_grace_s: float = 3600.0,
 ) -> dict:
     """Build or incrementally refresh the NDV stats artifact for the
-    current snapshot. Returns metrics: files_total / files_scanned /
-    files_reused / files_dropped, the artifact path, and the analyzed
-    table version.
+    current snapshot. Returns the artifact metrics of
+    ``artifacts.refresh``.
 
     A previous artifact is reused when its (p, salt, family) match; a
     parameter change rebuilds from scratch (sketches with different
@@ -125,144 +99,27 @@ def analyze(
     the already-paid-for sketches of every other column, and a column
     the artifact has never seen triggers one extra pass over the
     surviving files for that column only."""
-    snap = table.snapshot()
-    live = {f.path for f in snap.files}
-    columns = list(columns)
-    for c in columns:
-        if c not in {f.name for f in snap.schema.fields}:
-            raise ValueError(f"analyze: no such column {c!r}")
 
-    schema_names = {f.name for f in snap.schema.fields}
-    idx = load_index(table)
-    reusable = (
-        idx is not None
-        and idx["p"] == p
-        and idx["salt"] == salt
-        and idx["family"] == family
-    )
-    prev = None
-    prev_paths: set[str] = set()
-    prev_cols: set[str] = set()
-    if reusable:
-        prev = spark.read.parquet(os.path.join(_stats_dir(table), idx["artifact"]))
-        prev_paths = set(idx["file_paths"])
-        # already-paid-for sketches of OTHER columns are kept (a subset
-        # re-analyze must not destroy them); columns dropped by schema
-        # evolution leave the artifact — new files can't maintain them
-        prev_cols = set(idx["columns"]) & schema_names
-    eff_cols = sorted(set(columns) | prev_cols)
-    new_cols = sorted(set(columns) - prev_cols) if prev is not None else []
-
-    keep = sorted(prev_paths & live)
-    todo = [f for f in snap.files if f.path not in prev_paths]
-    root_prefix = os.path.abspath(table.root) + os.sep
-
-    def _scan(entries, cols):
-        df = read_entries(
-            spark,
-            table.root,
-            entries,
-            snap.schema,
-            snap.partition_cols,
-            file_path_col="_file",
-            column_mapping=snap.column_mapping,
-            file_defaults=snap.defaults,
-        )
+    def file_rows(scan, _entries, cols):
         return (
-            _register_rows(df, cols, p, salt, family)
-            .withColumn(
-                "path", F.expr(f"substring(_file, {len(root_prefix) + 1})")
-            )
-            .groupBy("path", "column", "bucket")
+            _register_rows(scan, cols, p, salt, family)
+            .groupBy(F.col("_file").alias("path"), "column", "bucket")
             .agg(F.max("rho").alias("rho"))
-            .select("path", "column", "bucket", "rho")
         )
 
-    parts = []
-    if prev is not None and keep:
-        keep_df = spark.createDataFrame(
-            [(k,) for k in keep], "_keep_path string"
+    return artifacts.refresh(
+        spark, table, "ndv", columns,
+        {"p": p, "salt": salt, "family": family}, _ROW_DDL, file_rows,
+    )
+
+
+def _index(table: Table) -> dict:
+    idx = artifacts.load_index(table, "ndv")
+    if idx is None:
+        raise ValueError(
+            f"no NDV stats artifact at {artifacts.artifact_dir(table, 'ndv')}"
         )
-        parts.append(
-            prev.join(
-                F.broadcast(keep_df),
-                prev["path"] == keep_df["_keep_path"],
-            )
-            .where(F.col("column").isin(sorted(prev_cols)))
-            .select("path", "column", "bucket", "rho")
-        )
-    if todo:
-        parts.append(_scan(todo, eff_cols))
-    if new_cols and keep:
-        # columns the artifact has never seen need the SURVIVING files
-        # scanned once too (only for those columns)
-        kset = set(keep)
-        parts.append(
-            _scan([f for f in snap.files if f.path in kset], new_cols)
-        )
-
-    merged = parts[0]
-    for extra in parts[1:]:
-        merged = merged.unionByName(extra)
-    if not parts:
-        merged = spark.createDataFrame(
-            [], "path string, column string, bucket int, rho int"
-        )
-
-    # unique artifact dir per run: Spark reads `prev` lazily DURING the
-    # write, so a same-version re-analyze must never overwrite the
-    # directory it is merging from — and two CONCURRENT analyzes must
-    # never write the same directory (each lands its own artifact, the
-    # index swap below is last-writer-wins between two valid artifacts)
-    artifact = f"v{snap.version:020d}_{uuid.uuid4().hex[:8]}"
-    out_dir = os.path.join(_stats_dir(table), artifact)
-    merged.write.mode("overwrite").parquet(out_dir)
-
-    index = {
-        "analyzed_version": snap.version,
-        "artifact": artifact,
-        "p": p,
-        "salt": salt,
-        "family": family,
-        "columns": eff_cols,
-        "file_paths": sorted(live),
-    }
-    tmp = _index_path(table) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(index, f)
-    os.replace(tmp, _index_path(table))
-
-    # Best-effort cleanup. A concurrent analyze may have WRITTEN its
-    # artifact but not yet swapped the index (deleting an unknown dir
-    # would strand its index at a missing path — TOCTOU), so only two
-    # classes of dir are safe to remove: (a) the artifact WE superseded
-    # (it was live when we started; any racer merging from it has its
-    # own copy of the rows by now or loses the index swap to us), and
-    # (b) unreferenced dirs older than ``cleanup_grace_s`` — crashed
-    # runs' leftovers, long past any plausible in-flight write. The
-    # same grace-window discipline as gc_orphans.
-    live_idx = load_index(table)
-    keep_dirs = {artifact, live_idx["artifact"] if live_idx else artifact}
-    superseded = idx["artifact"] if idx else None
-    now = time.time()
-    for name in os.listdir(_stats_dir(table)):
-        full = os.path.join(_stats_dir(table), name)
-        if not os.path.isdir(full) or name in keep_dirs:
-            continue
-        aged = now - os.path.getmtime(full) > cleanup_grace_s
-        if name == superseded or aged:
-            shutil.rmtree(full, ignore_errors=True)
-
-    scanned = len(todo) + (len(keep) if new_cols else 0)
-    return {
-        "analyzed_version": snap.version,
-        "artifact_path": out_dir,
-        "columns": eff_cols,
-        "files_total": len(live),
-        "files_scanned": scanned,
-        "files_reused": len(live) - scanned,
-        "files_dropped": len(prev_paths - live),
-    }
+    return idx
 
 
 def ndv_df(spark: SparkSession, table: Table) -> DataFrame:
@@ -270,12 +127,8 @@ def ndv_df(spark: SparkSession, table: Table) -> DataFrame:
     artifact ALONE (no data read): MAX-merge the per-file registers, then
     the exact-integer HLL estimate. Columns: ``column, ndv_estimate,
     zero_registers, register_sum, register_checksum``."""
-    idx = load_index(table)
-    if idx is None:
-        raise ValueError(f"no NDV stats artifact at {_stats_dir(table)}")
-    regs = spark.read.parquet(
-        os.path.join(_stats_dir(table), idx["artifact"])
-    )
+    idx = _index(table)
+    regs = artifacts.read_artifact(spark, table, "ndv", idx)
     merged = regs.groupBy("column", "bucket").agg(F.max("rho").alias("rho"))
     est = hll_estimate(merged, ["column"], p=idx["p"])
     return est.withColumnRenamed("hll_estimate", "ndv_estimate")
@@ -289,10 +142,7 @@ def ndv_estimates(spark: SparkSession, table: Table) -> dict[str, float]:
     hash-checked sketch columns (see sketches.py on why)."""
     import math
 
-    idx = load_index(table)
-    if idx is None:
-        raise ValueError(f"no NDV stats artifact at {_stats_dir(table)}")
-    m = 1 << idx["p"]
+    m = 1 << _index(table)["p"]
     out: dict[str, float] = {}
     for r in ndv_df(spark, table).collect():
         z = r["zero_registers"]

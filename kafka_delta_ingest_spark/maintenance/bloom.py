@@ -8,8 +8,10 @@ range overlap every batch, and without a ``bucket(N, key)`` spec there is
 no membership dimension at all, so MERGE rewrites the whole table to
 update a handful of rows. Iceberg's answer is a per-file bloom filter in
 a Puffin stats blob; Delta's is a bloom-filter index per file. This
-module is that layer rebuilt Spark-first, following the same artifact
-discipline as the NDV stats (maintenance/analyze.py):
+module is that layer rebuilt Spark-first. The artifact under
+``<root>/_stats/bloom/`` has the same lifecycle as the NDV stats —
+build, reuse, publish and cleanup live in maintenance/artifacts.py; this
+module supplies the filter rows and the probe:
 
 - **One scan, pure Catalyst**: probe positions are double-hashed
   (Kirsch–Mitzenmacher: ``pos_i = (h1 + i·h2_odd) mod m``) from the
@@ -23,8 +25,8 @@ discipline as the NDV stats (maintenance/analyze.py):
   small files don't pay the big-file footprint; the per-row ``m`` rides
   in the artifact and the probe expression uses it directly.
 - **Incremental by construction**: re-build after a commit reuses every
-  surviving file's rows (path anti-join, never a rescan), scans only
-  unseen files, drops rows of removed files — cost ∝ churn.
+  surviving file's rows (never a rescan), scans only unseen files, drops
+  rows of removed files — cost ∝ churn.
 - **No false negatives, ever**: files the artifact does not cover are
   conservatively touched; covered files prune only when EVERY probe bit
   of EVERY batch key misses. A file whose key column is all-NULL gets an
@@ -36,43 +38,22 @@ the decision itself reads ONLY the artifact (|candidate files| × |batch
 keys| codegen'd bit tests, distributed), never the data.
 
 Reference lineage: the same buffer-then-atomically-publish shape as the
-reference's stats machinery (/root/reference/src/writer.rs:655-707 stops
-at min/max/null-count; this is the point-lookup generalization).
+reference's stats machinery (its ``src/writer.rs:655-707`` stops at
+min/max/null-count; this is the point-lookup generalization).
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import shutil
-import time
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_delta_ingest_spark.maintenance import artifacts
 from kafka_delta_ingest_spark.operators.sketches import _hash60
 from kafka_delta_ingest_spark.table.format import Table
-from kafka_delta_ingest_spark.table.scan import read_entries
 
-_BLOOM_SUBDIR = os.path.join("_stats", "bloom")
-
-
-def _bloom_dir(table: Table) -> str:
-    return os.path.join(table.root, _BLOOM_SUBDIR)
-
-
-def _index_path(table: Table) -> str:
-    return os.path.join(_bloom_dir(table), "INDEX.json")
-
-
-def load_index(table: Table) -> dict | None:
-    try:
-        with open(_index_path(table)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+_ROW_DDL = "path string, column string, m int, words array<bigint>"
 
 
 def _bit_mask(b: Column) -> Column:
@@ -125,66 +106,26 @@ def build_bloom(
     salt: str = "bloom",
     family: str = "xxhash64",
     m_max: int = 1 << 23,
-    cleanup_grace_s: float = 3600.0,
 ) -> dict:
     """Build or incrementally refresh the per-file bloom artifact for the
     current snapshot. Artifact rows: ``(path, column, m, words)`` with
-    ``words: array<long>`` of length ``m/64``. Returns metrics
-    (files_total / scanned / reused / dropped, artifact path, version).
+    ``words: array<long>`` of length ``m/64``. Returns the artifact
+    metrics of ``artifacts.refresh``.
 
     A previous artifact is reused when its (k, salt, family,
     bits_per_key, m_max) match; a parameter change rebuilds (filters with
-    different probe functions cannot be reused). Column handling mirrors
-    ANALYZE: already-built columns of surviving files are kept, brand-new
-    columns trigger one extra pass over surviving files for those columns
-    only."""
-    snap = table.snapshot()
-    live = {f.path for f in snap.files}
-    schema_names = {f.name for f in snap.schema.fields}
-    columns = list(columns)
-    for c in columns:
-        if c not in schema_names:
-            raise ValueError(f"build_bloom: no such column {c!r}")
+    different probe functions cannot be reused). Column handling is
+    ANALYZE's: already-built columns of surviving files are kept,
+    brand-new columns trigger one extra pass over surviving files for
+    those columns only."""
 
-    idx = load_index(table)
-    reusable = idx is not None and all(
-        idx[p] == v
-        for p, v in (
-            ("k", k), ("salt", salt), ("family", family),
-            ("bits_per_key", bits_per_key), ("m_max", m_max),
-        )
-    )
-    prev = None
-    prev_paths: set[str] = set()
-    prev_cols: set[str] = set()
-    if reusable:
-        prev = spark.read.parquet(os.path.join(_bloom_dir(table), idx["artifact"]))
-        prev_paths = set(idx["file_paths"])
-        prev_cols = set(idx["columns"]) & schema_names
-    eff_cols = sorted(set(columns) | prev_cols)
-    new_cols = sorted(set(columns) - prev_cols) if prev is not None else []
-
-    keep = sorted(prev_paths & live)
-    todo = [f for f in snap.files if f.path not in prev_paths]
-    root_prefix = os.path.abspath(table.root) + os.sep
-    m_by_path = {
-        f.path: file_m_bits(f.num_records, bits_per_key, m_max)
-        for f in snap.files
-    }
-
-    def _scan(entries, cols) -> DataFrame:
-        df = read_entries(
-            spark, table.root, entries, snap.schema, snap.partition_cols,
-            file_path_col="_file", column_mapping=snap.column_mapping,
-            file_defaults=snap.defaults,
-        ).withColumn(
-            "path", F.expr(f"substring(_file, {len(root_prefix) + 1})")
-        )
-        mdf = spark.createDataFrame(
-            [(e.path, m_by_path[e.path]) for e in entries],
-            "_mpath string, m int",
-        )
-        df = df.join(F.broadcast(mdf), df["path"] == mdf["_mpath"])
+    def file_rows(scan, entries, cols) -> DataFrame:
+        m_of = {
+            e.path: file_m_bits(e.num_records, bits_per_key, m_max)
+            for e in entries
+        }
+        mdf = spark.createDataFrame(list(m_of.items()), "path string, m int")
+        df = scan.join(F.broadcast(mdf), scan["_file"] == mdf["path"])
         probes = []
         for c in cols:
             h1, h2 = _hash_pair(F.col(c), salt, family)
@@ -228,7 +169,7 @@ def build_bloom(
         # covered: an all-zero filter correctly prunes them for any
         # non-null key
         cand = spark.createDataFrame(
-            [(e.path, c, m_by_path[e.path]) for e in entries for c in cols],
+            [(p, c, m) for p, m in m_of.items() for c in cols],
             "path string, column string, m int",
         )
         empty = (
@@ -243,73 +184,12 @@ def build_bloom(
         )
         return dense.unionByName(empty)
 
-    parts = []
-    if prev is not None and keep:
-        keep_df = spark.createDataFrame([(p,) for p in keep], "_keep string")
-        parts.append(
-            prev.join(F.broadcast(keep_df), prev["path"] == keep_df["_keep"])
-            .where(F.col("column").isin(sorted(prev_cols)))
-            .select("path", "column", "m", "words")
-        )
-    if todo:
-        parts.append(_scan(todo, eff_cols))
-    if new_cols and keep:
-        kset = set(keep)
-        parts.append(_scan([f for f in snap.files if f.path in kset], new_cols))
-
-    if parts:
-        merged = parts[0]
-        for extra in parts[1:]:
-            merged = merged.unionByName(extra)
-    else:
-        merged = spark.createDataFrame(
-            [], "path string, column string, m int, words array<bigint>"
-        )
-
-    artifact = f"v{snap.version:020d}_{uuid.uuid4().hex[:8]}"
-    out_dir = os.path.join(_bloom_dir(table), artifact)
-    merged.write.mode("overwrite").parquet(out_dir)
-
-    index = {
-        "analyzed_version": snap.version,
-        "artifact": artifact,
-        "k": k,
-        "salt": salt,
-        "family": family,
-        "bits_per_key": bits_per_key,
-        "m_max": m_max,
-        "columns": eff_cols,
-        "file_paths": sorted(live),
-    }
-    tmp = _index_path(table) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(index, f)
-    os.replace(tmp, _index_path(table))
-
-    # same two-class cleanup as ANALYZE: the artifact we superseded, plus
-    # unreferenced dirs past the grace window (crashed runs)
-    live_idx = load_index(table)
-    keep_dirs = {artifact, live_idx["artifact"] if live_idx else artifact}
-    superseded = idx["artifact"] if idx else None
-    now = time.time()
-    for name in os.listdir(_bloom_dir(table)):
-        full = os.path.join(_bloom_dir(table), name)
-        if not os.path.isdir(full) or name in keep_dirs:
-            continue
-        aged = now - os.path.getmtime(full) > cleanup_grace_s
-        if name == superseded or aged:
-            shutil.rmtree(full, ignore_errors=True)
-
-    scanned = len(todo) + (len(keep) if new_cols else 0)
-    return {
-        "analyzed_version": snap.version,
-        "artifact_path": out_dir,
-        "columns": eff_cols,
-        "files_total": len(live),
-        "files_scanned": scanned,
-        "files_reused": len(live) - scanned,
-        "files_dropped": len(prev_paths - live),
-    }
+    return artifacts.refresh(
+        spark, table, "bloom", columns,
+        {"k": k, "salt": salt, "family": family,
+         "bits_per_key": bits_per_key, "m_max": m_max},
+        _ROW_DDL, file_rows,
+    )
 
 
 def prune_entries_by_conjuncts(
@@ -325,7 +205,7 @@ def prune_entries_by_conjuncts(
     covered conjunct independently prunes and the survivors intersect —
     AND semantics, matching the manifest pruner. No artifact, or no
     covered column ⇒ the list is returned unchanged (conservative)."""
-    idx = load_index(table)
+    idx = artifacts.load_index(table, "bloom")
     if idx is None or not entries:
         return entries
     from pyspark.sql import types as T
@@ -367,7 +247,7 @@ def bloom_prune(
 
     Cost: reads ONLY the artifact — |candidates| × |distinct keys|
     codegen'd k-bit tests, keys broadcast."""
-    idx = load_index(table)
+    idx = artifacts.load_index(table, "bloom")
     if idx is None or key not in idx["columns"]:
         return None
     covered = set(idx["file_paths"])
@@ -376,9 +256,8 @@ def bloom_prune(
     if not to_test:
         return uncovered
 
-    art = (
-        spark.read.parquet(os.path.join(_bloom_dir(table), idx["artifact"]))
-        .where(F.col("column") == key)
+    art = artifacts.read_artifact(spark, table, "bloom", idx).where(
+        F.col("column") == key
     )
     cand_df = spark.createDataFrame([(p,) for p in to_test], "_cand string")
     art = art.join(F.broadcast(cand_df), art["path"] == cand_df["_cand"])

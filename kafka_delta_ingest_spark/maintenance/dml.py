@@ -110,7 +110,10 @@ def _rewrite_touched(
     # over a file that also has merge-on-read deletes cannot resurrect them
     df = snap.read(spark, touched)
     out = transform(df, predicate_column(conjuncts))
-    _, adds = stage_dataframe(spark, table, out, snap.partition_cols, snap.schema)
+    _, adds = stage_dataframe(
+        spark, table, out, snap.partition_cols, snap.schema,
+        properties=snap.properties, column_mapping=snap.column_mapping,
+    )
     v = table.commit(
         Transaction(
             operation=operation,
@@ -375,7 +378,10 @@ def rewrite_deletes(spark: SparkSession, table: Table) -> dict:
         metrics.update(version=snap.version, duration_s=time.time() - t0)
         return metrics
     df = snap.read(spark, covered)
-    _, adds = stage_dataframe(spark, table, df, snap.partition_cols, snap.schema)
+    _, adds = stage_dataframe(
+        spark, table, df, snap.partition_cols, snap.schema,
+        properties=snap.properties, column_mapping=snap.column_mapping,
+    )
     v = table.commit(
         Transaction(
             operation="rewrite-deletes",

@@ -24,8 +24,9 @@ O(live files) driver work — at 10^12 rows this is a manifest walk):
   (scan-side reconstruction depends on it);
 - **checkpoint parity**: replaying from the latest checkpoint yields the
   same live file set as the checkpoint-free JSON replay;
-- **stats artifact sanity** (if present): INDEX.json points at an
-  existing artifact directory;
+- **stats artifact sanity** (if present): the index of each per-file
+  stats artifact under ``_stats/`` (NDV sketches, key blooms) points at
+  an existing artifact directory;
 - **orphan pressure** (informational): bytes under ``data/`` that no
   live file references — input to ``gc_orphans``, not an error (old
   snapshots and staged commits legitimately hold space).
@@ -183,41 +184,21 @@ def check_table(table: Table) -> dict:
                 )
             )
 
-    # stats artifact sanity
-    from kafka_delta_ingest_spark.maintenance.analyze import (
-        _stats_dir,
-        load_index,
-    )
+    # stats artifact sanity: each kind's index must point at an existing
+    # directory; a stale-but-valid index is fine (consumers treat files
+    # it does not cover conservatively)
+    from kafka_delta_ingest_spark.maintenance import artifacts
 
-    idx = load_index(table)
-    if idx is not None:
-        art = os.path.join(_stats_dir(table), idx["artifact"])
-        if not os.path.isdir(art):
+    for kind, check in (("ndv", "stats"), ("bloom", "bloom")):
+        idx = artifacts.load_index(table, kind)
+        if idx is not None and not os.path.isdir(
+            artifacts.artifact_path(table, kind, idx)
+        ):
             findings.append(
                 _finding(
-                    "stats", "error",
-                    f"NDV INDEX.json points at missing artifact "
+                    check, "error",
+                    f"{kind} index points at missing artifact "
                     f"{idx['artifact']}",
-                )
-            )
-
-    # bloom artifact sanity (same contract as the NDV artifact): the
-    # index must point at an existing directory; a stale-but-valid index
-    # is fine (uncovered files are conservatively touched by consumers)
-    from kafka_delta_ingest_spark.maintenance.bloom import (
-        _bloom_dir,
-        load_index as load_bloom_index,
-    )
-
-    bidx = load_bloom_index(table)
-    if bidx is not None:
-        bart = os.path.join(_bloom_dir(table), bidx["artifact"])
-        if not os.path.isdir(bart):
-            findings.append(
-                _finding(
-                    "bloom", "error",
-                    f"bloom INDEX.json points at missing artifact "
-                    f"{bidx['artifact']}",
                 )
             )
 

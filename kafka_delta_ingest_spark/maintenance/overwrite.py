@@ -110,7 +110,7 @@ def overwrite_where(
     removes = [f.path for f in inside] + [f.path for f in straddling]
     _, adds = stage_dataframe(
         spark, table, out, snap.partition_cols, snap.schema,
-        properties=snap.properties,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
     if not adds and not removes:
         return {
@@ -162,7 +162,7 @@ def overwrite_dynamic(
 
     _, adds = stage_dataframe(
         spark, table, df.select(*cols), snap.partition_cols, snap.schema,
-        properties=snap.properties,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
     from kafka_delta_ingest_spark.table import transforms
 

@@ -64,7 +64,8 @@ def upsert(
         raise ValueError(f"upsert key columns not in schema: {missing}")
 
     _, adds = stage_dataframe(
-        spark, table, source, snap.partition_cols, snap.schema
+        spark, table, source, snap.partition_cols, snap.schema,
+        properties=snap.properties, column_mapping=snap.column_mapping,
     )
     rows_in = sum(a.num_records for a in adds)
 

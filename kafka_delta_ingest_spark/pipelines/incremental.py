@@ -92,7 +92,10 @@ def refresh_aggregate(
         merged = partial
     merged = merged.select(*[f.name for f in schema.fields]).coalesce(1)
 
-    _, adds = stage_dataframe(spark, dest, merged, [], schema)
+    _, adds = stage_dataframe(
+        spark, dest, merged, [], schema,
+        properties=dsnap.properties, column_mapping=dsnap.column_mapping,
+    )
     v = dest.commit(
         Transaction(
             operation="incremental-refresh",
@@ -133,7 +136,10 @@ def full_refresh(
         *[f.name for f in schema.fields]
     ).coalesce(1)
     dsnap = dest.snapshot()
-    _, adds = stage_dataframe(spark, dest, merged, [], schema)
+    _, adds = stage_dataframe(
+        spark, dest, merged, [], schema,
+        properties=dsnap.properties, column_mapping=dsnap.column_mapping,
+    )
     stored = dest.txn_version(app_key)
     v = dest.commit(
         Transaction(
@@ -210,7 +216,10 @@ def refresh_aggregate_cdc(
     merged = merged.select(*[f.name for f in schema.fields]).coalesce(1)
 
     dsnap = dest.snapshot()
-    _, adds = stage_dataframe(spark, dest, merged, [], schema)
+    _, adds = stage_dataframe(
+        spark, dest, merged, [], schema,
+        properties=dsnap.properties, column_mapping=dsnap.column_mapping,
+    )
     v = dest.commit(
         Transaction(
             operation="incremental-refresh-cdc",

@@ -240,7 +240,6 @@ class Transaction:
     remove_deletes: list[str] = field(default_factory=list)
     app_txns: dict[str, int] = field(default_factory=dict)  # "<app>-<part>" -> offset
     data_change: bool = True  # False for pure rewrites (compaction/cluster)
-    base_version: int | None = None  # snapshot the planner read; None = head
     metadata: dict[str, Any] = field(default_factory=dict)
     # when set, this commit updates the table schema (snapshot replay picks
     # it up from the commit's "metadata" key, same as the create commit)
@@ -942,7 +941,6 @@ class Table:
     def commit(
         self,
         txn: Transaction,
-        max_retries: int = DEFAULT_COMMIT_RETRIES,
         expected_schema: T.StructType | None = None,
     ) -> int:
         """Validate against the current head and CAS the next version.
@@ -1112,7 +1110,7 @@ class Table:
             try:
                 self._atomic_write_version(v, commit)
             except FileExistsError:
-                if attempt >= max_retries:
+                if attempt >= DEFAULT_COMMIT_RETRIES:
                     raise CommitConflictError(
                         f"lost CAS race {attempt} times at {self.root}"
                     )

@@ -3,14 +3,16 @@ exact distinct counts via the proven HLL merge property, incremental
 reuse (only unseen files scanned), dropped-file eviction, and estimate
 equality with a from-scratch whole-table sketch."""
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_delta_ingest_spark.maintenance.analyze import (
     analyze,
-    load_index,
     ndv_df,
 )
+from kafka_delta_ingest_spark.maintenance.artifacts import load_index
+from kafka_delta_ingest_spark.maintenance.bloom import build_bloom
 from kafka_delta_ingest_spark.table.format import Table
 from kafka_delta_ingest_spark.table.writer import write_dataframe
 
@@ -21,6 +23,13 @@ SCHEMA = T.StructType(
         T.StructField("source", T.StringType()),
     ]
 )
+
+
+# every per-file stats artifact kind, built with test-sized parameters
+BUILD = {
+    "ndv": lambda spark, t, cols: analyze(spark, t, cols, family="md5"),
+    "bloom": lambda spark, t, cols: build_bloom(spark, t, cols, bits_per_key=8),
+}
 
 
 def _rows(spark, start, n):
@@ -100,7 +109,7 @@ def test_analyze_is_incremental_and_drops_dead_files(spark, tmp_table_root):
     delete_where(spark, t, [("source", "=", "src2")])
     m4 = analyze(spark, t, ["doc_id"], family="md5")
     assert m4["files_dropped"] > 0
-    idx = load_index(t)
+    idx = load_index(t, "ndv")
     assert set(idx["file_paths"]) == {f.path for f in t.snapshot().files}
 
     from kafka_delta_ingest_spark.operators.sketches import hll_distinct
@@ -121,44 +130,53 @@ def test_analyze_param_change_rebuilds(spark, tmp_table_root):
     analyze(spark, t, ["doc_id"], p=8, family="md5")
     m = analyze(spark, t, ["doc_id"], p=10, family="md5")
     assert m["files_scanned"] == m["files_total"]
-    assert load_index(t)["p"] == 10
+    assert load_index(t, "ndv")["p"] == 10
     est = {r["column"]: r for r in ndv_df(spark, t).collect()}
     assert est["doc_id"]["zero_registers"] > 0  # p=10 -> 1024 registers
 
 
-def test_analyze_column_union_preserves_paid_for_sketches(spark, tmp_table_root):
+@pytest.mark.parametrize("kind", ["ndv", "bloom"])
+def test_analyze_column_union_preserves_paid_for_sketches(
+    spark, tmp_table_root, kind
+):
     """A subset re-analyze must not destroy other columns' sketches; a
     brand-new column triggers exactly one extra pass over surviving
     files for that column only."""
+    build = BUILD[kind]
     t = _fresh(spark, tmp_table_root, n=200)
-    m = analyze(spark, t, ["doc_id", "n_tok"], family="md5")
+    m = build(spark, t, ["doc_id", "n_tok"])
     total = m["files_total"]
 
     # subset: zero scans, both columns survive in artifact + index
-    m2 = analyze(spark, t, ["doc_id"], family="md5")
+    m2 = build(spark, t, ["doc_id"])
     assert m2["files_scanned"] == 0
     assert set(m2["columns"]) == {"doc_id", "n_tok"}
-    est = {r["column"] for r in ndv_df(spark, t).collect()}
-    assert est == {"doc_id", "n_tok"}
+    assert set(load_index(t, kind)["columns"]) == {"doc_id", "n_tok"}
+    if kind == "ndv":
+        est = {r["column"] for r in ndv_df(spark, t).collect()}
+        assert est == {"doc_id", "n_tok"}
 
     # superset with the preserved column: still zero scans
-    m3 = analyze(spark, t, ["doc_id", "n_tok"], family="md5")
+    m3 = build(spark, t, ["doc_id", "n_tok"])
     assert m3["files_scanned"] == 0
 
     # genuinely new column: one pass over the surviving files
-    m4 = analyze(spark, t, ["source"], family="md5")
+    m4 = build(spark, t, ["source"])
     assert m4["files_scanned"] == total
     assert set(m4["columns"]) == {"doc_id", "n_tok", "source"}
-    from kafka_delta_ingest_spark.operators.sketches import hll_distinct
+    assert set(load_index(t, kind)["columns"]) == {"doc_id", "n_tok", "source"}
+    if kind == "ndv":
+        from kafka_delta_ingest_spark.operators.sketches import hll_distinct
 
-    direct = hll_distinct(
-        t.snapshot().scan(spark), ["source"], family="md5"
-    ).collect()[0]
-    got = {r["column"]: r for r in ndv_df(spark, t).collect()}
-    assert got["source"]["register_checksum"] == direct["register_checksum"]
+        direct = hll_distinct(
+            t.snapshot().scan(spark), ["source"], family="md5"
+        ).collect()[0]
+        got = {r["column"]: r for r in ndv_df(spark, t).collect()}
+        assert got["source"]["register_checksum"] == direct["register_checksum"]
 
 
-def test_analyze_cleanup_is_concurrency_safe(spark, tmp_table_root):
+@pytest.mark.parametrize("kind", ["ndv", "bloom"])
+def test_analyze_cleanup_is_concurrency_safe(spark, tmp_table_root, kind):
     """Cleanup deletes exactly two classes of dir: the artifact this run
     superseded, and unreferenced dirs past the grace window. A FRESH
     unknown dir — a concurrent analyze that has written its artifact but
@@ -167,9 +185,10 @@ def test_analyze_cleanup_is_concurrency_safe(spark, tmp_table_root):
     import json
     import os
 
+    build = BUILD[kind]
     t = _fresh(spark, tmp_table_root, n=100)
-    analyze(spark, t, ["doc_id"], family="md5")
-    stats_dir = os.path.join(t.root, "_stats", "ndv")
+    build(spark, t, ["doc_id"])
+    stats_dir = os.path.join(t.root, "_stats", kind)
 
     def dirs():
         return {
@@ -188,12 +207,41 @@ def test_analyze_cleanup_is_concurrency_safe(spark, tmp_table_root):
     os.makedirs(stale)
     os.utime(stale, (1.0, 1.0))
 
-    analyze(spark, t, ["doc_id"], family="md5")
+    build(spark, t, ["doc_id"])
     remaining = dirs()
     assert "v0_inflight" in remaining, "cleanup killed an in-flight racer"
     assert "v0_crashed0" not in remaining, "aged leftover not collected"
     # the superseded artifact went away: live artifact + racer remain
     assert len(remaining) == 2
     live = json.load(open(os.path.join(stats_dir, "INDEX.json")))
-    assert os.path.isdir(os.path.join(stats_dir, live["artifact"]))
-    assert ndv_df(spark, t).count() == 1
+    art = os.path.join(stats_dir, live["artifact"])
+    assert os.path.isdir(art)
+    assert spark.read.parquet(art).select("column").distinct().count() == 1
+    if kind == "ndv":
+        assert ndv_df(spark, t).count() == 1
+
+
+@pytest.mark.parametrize("kind", ["ndv", "bloom"])
+def test_artifact_refresh_on_empty_and_truncated_table(
+    spark, tmp_table_root, kind
+):
+    """A table with no live files — never written, or truncated — gets a
+    valid empty artifact instead of a crash; after a truncate every
+    previously covered file counts as dropped."""
+    from kafka_delta_ingest_spark.maintenance.doctor import check_table
+
+    build = BUILD[kind]
+    t = Table.create(tmp_table_root, SCHEMA, partition_cols=["source"])
+    m = build(spark, t, ["doc_id"])
+    assert (m["files_total"], m["files_scanned"], m["files_dropped"]) == (0, 0, 0)
+    assert load_index(t, kind)["file_paths"] == []
+    assert spark.read.parquet(m["artifact_path"]).count() == 0
+
+    write_dataframe(spark, t, _rows(spark, 0, 60).repartition(2))
+    n = build(spark, t, ["doc_id"])["files_total"]
+    assert n > 0
+    t.truncate()
+    m = build(spark, t, ["doc_id"])
+    assert (m["files_total"], m["files_scanned"], m["files_dropped"]) == (0, 0, n)
+    assert spark.read.parquet(m["artifact_path"]).count() == 0
+    assert check_table(t)["ok"]

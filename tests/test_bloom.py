@@ -14,11 +14,11 @@ from kafka_delta_ingest_spark.datagen import (
     tokens_df,
 )
 from kafka_delta_ingest_spark.functions.verify import content_fingerprint
+from kafka_delta_ingest_spark.maintenance.artifacts import load_index
 from kafka_delta_ingest_spark.maintenance.bloom import (
     bloom_prune,
     build_bloom,
     file_m_bits,
-    load_index,
 )
 from kafka_delta_ingest_spark.maintenance.merge import merge_into
 from kafka_delta_ingest_spark.table.format import Transaction
@@ -198,7 +198,7 @@ def test_bloom_incremental_refresh_scans_only_churn(spark, tmp_table_root):
     got2 = bloom_prune(spark, t, "doc_id", keys,
                        [f.path for f in t.snapshot().files])
     assert got2 == []
-    idx = load_index(t)
+    idx = load_index(t, "bloom")
     assert len(idx["file_paths"]) == 8
 
     # a parameter change rebuilds from scratch

@@ -149,10 +149,14 @@ def test_merge_prunes_untouched_files(spark, tmp_table_root):
 def test_merge_delete(spark, tmp_table_root):
     t = make_small_file_table(spark, tmp_table_root, n_docs=500, n_files=5, max_tok=16)
     victims = tokens_df(spark, 50, max_tok=16)  # doc-0..49
-    merge_into(spark, t, victims, key="doc_id", when_matched="delete")
+    # one victim key matches no row: a delete-merge inserts nothing
+    unmatched = victims.limit(1).withColumn("doc_id", F.lit("no-such-doc"))
+    merge_into(spark, t, victims.unionByName(unmatched), key="doc_id",
+               when_matched="delete")
     snap = t.snapshot()
     assert snap.num_records() == 450
     assert snap.scan(spark).where(F.col("doc_id") < "doc-000000000050").count() == 0
+    assert snap.scan(spark).where(F.col("doc_id") == "no-such-doc").count() == 0
 
 
 def test_delete_where_prunes_and_deletes(spark, tmp_path):

@@ -231,3 +231,13 @@ def test_clause_validation(spark, tmp_path):
             spark, t, src,
             when_matched=[MergeClause("update", set={"nope": "1"})],
         )
+
+
+def test_legacy_when_matched_typo_is_rejected(spark, tmp_path):
+    """A misspelled legacy action must fail like a bad clause action, not
+    silently run an upsert."""
+    t, _ = _mk(spark, tmp_path, n_docs=30, n_files=2)
+    v = t.latest_version()
+    with pytest.raises(ValueError, match="update|delete"):
+        merge_into(spark, t, tokens_df(spark, 5, max_tok=8), when_matched="upate")
+    assert t.latest_version() == v

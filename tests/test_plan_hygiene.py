@@ -211,13 +211,13 @@ def test_bloom_probe_broadcasts_keys(spark, tmp_path):
     # reproduce bloom_prune's joined plan shape
     import os
 
-    from kafka_delta_ingest_spark.maintenance.bloom import (
-        _bloom_dir,
+    from kafka_delta_ingest_spark.maintenance.artifacts import (
+        artifact_dir,
         load_index,
     )
 
-    idx = load_index(t)
-    art = spark.read.parquet(os.path.join(_bloom_dir(t), idx["artifact"]))
+    idx = load_index(t, "bloom")
+    art = spark.read.parquet(os.path.join(artifact_dir(t, "bloom"), idx["artifact"]))
     keys = spark.createDataFrame([("k1",), ("k2",)], "doc_id string")
     joined = art.crossJoin(F.broadcast(keys.distinct()))
     plan = joined._jdf.queryExecution().executedPlan().toString()

@@ -46,11 +46,11 @@ def test_truncate_clears_mor_deletes(spark, tmp_table_root):
 def test_doctor_flags_missing_bloom_artifact(spark, tmp_table_root):
     import shutil
 
-    from kafka_delta_ingest_spark.maintenance.bloom import (
-        build_bloom,
+    from kafka_delta_ingest_spark.maintenance.artifacts import (
+        artifact_dir,
         load_index,
-        _bloom_dir,
     )
+    from kafka_delta_ingest_spark.maintenance.bloom import build_bloom
     from kafka_delta_ingest_spark.maintenance.doctor import check_table
 
     t = make_small_file_table(spark, tmp_table_root, n_docs=30, n_files=2,
@@ -59,8 +59,8 @@ def test_doctor_flags_missing_bloom_artifact(spark, tmp_table_root):
     assert check_table(t)["ok"]
     import os
 
-    idx = load_index(t)
-    shutil.rmtree(os.path.join(_bloom_dir(t), idx["artifact"]))
+    idx = load_index(t, "bloom")
+    shutil.rmtree(os.path.join(artifact_dir(t, "bloom"), idx["artifact"]))
     rep = check_table(t)
     assert not rep["ok"]
     assert any(f["check"] == "bloom" for f in rep["findings"])
